@@ -470,17 +470,15 @@ def _q_near_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_near_dedup_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the COMPLETE production dedup composition: capped in-bucket Jaccard
-    # (bounded quadratic) + rep-pairs recovery of the oversized buckets +
-    # connected components over the union + one-keep-per-component —
-    # every piece scale-safe, end-to-end oracle-gated
+    # (bounded quadratic) + rep-pairs recovery of the oversized buckets,
+    # both from one signature pass (near_dup_pairs) + connected components
+    # over the union + one-keep-per-component — every piece scale-safe,
+    # end-to-end oracle-gated
     d = _docs(spark, sf_dir)
-    p1 = D.jaccard_pairs(d, threshold_millis=500, max_bucket=16).select(
+    pairs = D.near_dup_pairs(d, threshold_millis=500, max_bucket=16).select(
         "id_a", "id_b"
     )
-    p2 = D.jaccard_rep_pairs(d, threshold_millis=500, max_bucket=16).select(
-        "id_a", "id_b"
-    )
-    return D.near_dedup_cc(d, p1.unionByName(p2).distinct()).select("doc_id")
+    return D.near_dedup_cc(d, pairs).select("doc_id")
 
 
 def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -111,20 +111,16 @@ def compute_gate_ids(docs, eval_df, cfg: DataJobConfig):
     from .operators.dedup import (
         decontaminate,
         exact_dedup_groups,
-        jaccard_pairs,
-        jaccard_rep_pairs,
         near_dedup_cc,
+        near_dup_pairs,
     )
 
     ic, tc = cfg.id_col, cfg.text_col
     keep = exact_dedup_groups(docs, tc, ic).select(F.col("keep_id").alias(ic))
-    p1 = jaccard_pairs(
+    pairs = near_dup_pairs(
         docs, tc, ic, cfg.threshold_millis, max_bucket=cfg.max_bucket
     ).select("id_a", "id_b")
-    p2 = jaccard_rep_pairs(
-        docs, tc, ic, cfg.threshold_millis, max_bucket=cfg.max_bucket
-    ).select("id_a", "id_b")
-    cc = near_dedup_cc(docs.select(ic), p1.unionByName(p2).distinct(), ic)
+    cc = near_dedup_cc(docs.select(ic), pairs, ic)
     keep = keep.join(cc, ic, "left_semi")
     if eval_df is not None:
         clean = decontaminate(

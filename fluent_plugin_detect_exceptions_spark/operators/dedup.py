@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.text import normalized, stable_hash64
+from ..functions.text import normalized
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
@@ -54,24 +54,6 @@ def shingles(text_col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
     return F.when(n >= k, F.array_distinct(seq)).otherwise(F.array(base))
 
 
-def minhash_signature(
-    text_col: Column,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    k: int = DEFAULT_SHINGLE_K,
-) -> Column:
-    """Array of ``num_hashes`` minhash values (bigint)."""
-    sh = shingles(text_col, k)
-
-    def hasher(j: int):
-        # NB: must be a 1-arg lambda — a `lambda s, j=j` would be treated by
-        # F.transform as its (element, index) binary form.
-        prefix = f"{j}:"
-        return lambda s: stable_hash64(F.concat(F.lit(prefix), s))
-
-    sigs = [F.array_min(F.transform(sh, hasher(j))) for j in range(num_hashes)]
-    return F.array(*sigs)
-
-
 _WS_RE = None
 
 
@@ -85,34 +67,65 @@ def _py_shingles(text: str, k: int) -> set:
         # Unicode \s would also fold \xa0/  etc. and diverge (ADVICE r2).
         # str.lower() stays Python-Unicode — divergence is possible only for
         # non-ASCII case mappings, which the oracle equivalence excludes.
+        # The trim is spaces only, as Spark's trim: str.strip() would also
+        # drop edge \xa0, \x1c-\x1f, \x85 the JVM keeps.
         _WS_RE = _re.compile(r"\s+", _re.ASCII)
-    base = _WS_RE.sub(" ", text.lower()).strip()
+    base = _WS_RE.sub(" ", text.lower()).strip(" ")
     if len(base) >= k:
         return {base[i : i + k] for i in range(len(base) - k + 1)}
     return {base}
 
 
 def _md5_family_hashes(strings, num_hashes: int):
-    """(num_hashes, len(strings)) uint64 matrix of the portable md5 scheme
-    ``md5(b"j:" + s)`` (top 60 bits) — one md5 call per (family, distinct
-    string); the irreducible cost of the oracle-portable hash."""
+    """(num_hashes + 1, len(strings)) uint64 matrix of the portable md5
+    scheme (top 60 bits): row j < num_hashes is the minhash family
+    ``md5(b"j:" + s)``, the last row the unsalted ``md5(s)`` — the
+    ``stable_hash64`` of the shingle, the element of its document's
+    shingle-hash set.  One md5 call per (row, distinct string); the
+    irreducible cost of the oracle-portable hash."""
     import hashlib
 
     import numpy as np
 
-    hv = np.empty((num_hashes, max(len(strings), 1)), dtype=np.uint64)
+    hv = np.empty((num_hashes + 1, max(len(strings), 1)), dtype=np.uint64)
     for i, s in enumerate(strings):
         sb = s.encode()
         for j in range(num_hashes):
             d = hashlib.md5(b"%d:%s" % (j, sb)).digest()
             hv[j, i] = int.from_bytes(d[:8], "big") >> 4
+        hv[num_hashes, i] = int.from_bytes(hashlib.md5(sb).digest()[:8], "big") >> 4
     return hv
+
+
+def _signature_arrays(mins, valid, docs, hashes):
+    """Arrow columns of one signature batch: the ``mins.shape[1]`` minhash
+    columns (null where ``valid`` is False, i.e. the text is null) and
+    ``sh``, each document's ascending distinct shingle-hash set, gathered
+    from the parallel chunks ``docs`` (batch row) / ``hashes`` (shingle
+    hash).  Equal hashes of distinct shingles merge, exactly as
+    ``array_distinct`` over the hashes does in the DuckDB oracle."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = valid.size
+    doc = np.concatenate(docs).astype(np.int64) if docs else np.empty(0, np.int64)
+    val = np.concatenate(hashes).astype(np.int64) if hashes else np.empty(0, np.int64)
+    order = np.lexsort((val, doc))
+    doc, val = doc[order], val[order]
+    keep = np.ones(doc.size, dtype=bool)
+    keep[1:] = (doc[1:] != doc[:-1]) | (val[1:] != val[:-1])
+    doc, val = doc[keep], val[keep]
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(doc, minlength=n), out=offsets[1:])
+    mask = None if valid.all() else ~valid
+    sigs = [pa.array(mins[:, j].astype(np.int64), mask=mask) for j in range(mins.shape[1])]
+    return sigs + [pa.ListArray.from_arrays(pa.array(offsets), pa.array(val))]
 
 
 def _normalized_series(texts, ws_re):
     """Vectorized mirror of _py_shingles' normalization: lower, collapse
-    ASCII whitespace runs, strip; None → ''."""
-    return texts.fillna("").str.lower().str.replace(ws_re, " ", regex=True).str.strip()
+    ASCII whitespace runs, strip spaces; None → ''."""
+    return texts.fillna("").str.lower().str.replace(ws_re, " ", regex=True).str.strip(" ")
 
 
 def _intern_windows(big, pos, k):
@@ -170,28 +183,29 @@ def _intern_windows(big, pos, k):
 
 def _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k,
                               max_slab_windows: int = 4 << 20):
-    """One batch of minhash signatures with NO per-document Python loop in
+    """One batch of the signature stage as Arrow columns (see
+    ``_signature_arrays``): ``num_hashes`` minhash columns then ``sh``, the
+    per-document distinct shingle-hash set.  NO per-document Python loop in
     the hot path (VERDICT r3 item 4 — the segmenter's recipe applied here):
 
     * normalization is one vectorized pandas str pipeline;
     * the WHOLE batch decodes to one uint32 codepoint buffer via a single
       ``str.cat().encode('utf-32-le')`` call (per-doc arrays are zero-copy
-      offset views — no per-doc encode, VERDICT r4 note 2), and every
-      k-shingle of every document is a row of ``sliding_window_view`` over
-      it — windows that would cross a document boundary are masked out
-      arithmetically;
-    * distinct shingles come from ``np.unique`` on a void view of the
-      window matrix (signature minima are unaffected by duplicates, so no
-      per-doc distinct is needed at all);
-    * md5 runs once per (family, DISTINCT shingle) — identical scheme and
-      call count to the interned pandas form;
-    * per-document minima are one ``np.minimum.reduceat`` over the
-      doc-ordered window values — replacing the former per-doc gather loop.
+      offset views — no per-doc encode, VERDICT r4 note 2); every k-shingle
+      start of every document is a position in it, and windows that would
+      cross a document boundary are masked out arithmetically;
+    * distinct shingles come from the int64 factorize chain of
+      ``_intern_windows`` (no window matrix materializes);
+    * md5 runs once per (row of ``_md5_family_hashes``, DISTINCT shingle) —
+      the minhash families plus the unsalted ``sh`` hash;
+    * the distinct (doc, shingle) pairs feed both outputs: per-document
+      minima are one ``np.minimum.reduceat`` over them, and their unsalted
+      hashes are the documents' ``sh`` sets.
 
     Documents shorter than k degrade to a whole-text shingle (handled on
-    the short-doc side path, matching _py_shingles)."""
+    the short-doc side path, matching _py_shingles).  A NULL text has null
+    signatures (so a null band key, as in the oracle) and an empty ``sh``."""
     import numpy as np
-    import pandas as pd
 
     global _WS_RE
     if _WS_RE is None:
@@ -201,7 +215,9 @@ def _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k,
 
     texts = pdf[text_col]
     n = len(pdf)
-    mins = np.empty((n, num_hashes), dtype=np.uint64)
+    valid = texts.notna().to_numpy(dtype=bool)
+    mins = np.zeros((n, num_hashes), dtype=np.uint64)
+    sh_docs, sh_hashes = [], []
     if n:
         base = _normalized_series(texts, _WS_RE)
         # ONE encode call for the whole batch (VERDICT r4 note 2 — this was
@@ -217,7 +233,7 @@ def _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k,
         long_mask = lens >= k
         # --- long docs: flat buffer + boundary-masked sliding windows, in
         # SLABS of ≤ ~4M windows so peak memory stays bounded regardless of
-        # Arrow batch size (the window matrix and the per-window value
+        # Arrow batch size (the window positions and the per-window value
         # gather are the two W-sized intermediates).  Slabs split at doc
         # boundaries (a single doc larger than the slab cap forms its own
         # slab); distinct-shingle interning is per slab — cross-slab
@@ -246,26 +262,30 @@ def _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k,
                 offs = np.concatenate(([0], np.cumsum(slens)))
                 pos = np.arange(big.size - k + 1, dtype=np.int64)
                 doc_of = np.repeat(np.arange(sl.size), slens)[: pos.size]
-                valid = (pos - offs[doc_of]) <= (slens[doc_of] - k)
-                doc_ids = doc_of[valid]
+                valid_win = (pos - offs[doc_of]) <= (slens[doc_of] - k)
+                doc_ids = doc_of[valid_win]
                 # distinct shingles via the int64 factorize CHAIN (r5 —
                 # ~3x the void-row factorize this replaces, and no window
                 # matrix materializes at all), then per-(doc, shingle)
                 # dedupe through one int64 sort so the family gather runs
                 # over distinct pairs, not raw windows
-                inv, shingles = _intern_windows(big, pos[valid], k)
+                inv, shingles = _intern_windows(big, pos[valid_win], k)
                 hv = _md5_family_hashes(shingles, num_hashes)
                 V = max(len(shingles), 1)
                 pairs = np.unique(doc_ids.astype(np.int64) * V + inv)
                 pdoc = pairs // V
                 pinv = (pairs % V).astype(np.intp)
                 firsts = np.flatnonzero(np.r_[True, pdoc[1:] != pdoc[:-1]])
-                red = np.minimum.reduceat(hv[:, pinv], firsts, axis=1)
+                red = np.minimum.reduceat(hv[:num_hashes, pinv], firsts, axis=1)
                 mins[sl[pdoc[firsts]]] = red.T
+                sh_docs.append(sl[pdoc])
+                sh_hashes.append(hv[num_hashes, pinv])
                 start = end
-        # --- short docs: whole-text shingle (interned across the batch)
-        if not long_mask.all():
-            sidx = np.flatnonzero(~long_mask)
+        # --- short non-null docs: whole-text shingle (interned across the
+        # batch)
+        short = ~long_mask & valid
+        if short.any():
+            sidx = np.flatnonzero(short)
             svocab: dict[str, int] = {}
             sids = np.fromiter(
                 (svocab.setdefault(base.iloc[int(i)], len(svocab)) for i in sidx),
@@ -273,8 +293,10 @@ def _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k,
                 count=sidx.size,
             )
             shv = _md5_family_hashes(list(svocab), num_hashes)
-            mins[sidx] = shv[:, sids].T
-    return mins.astype(np.int64)
+            mins[sidx] = shv[:num_hashes, sids].T
+            sh_docs.append(sidx)
+            sh_hashes.append(shv[num_hashes, sids])
+    return _signature_arrays(mins, valid, sh_docs, sh_hashes)
 
 
 def minhash_signatures_df(
@@ -285,51 +307,60 @@ def minhash_signatures_df(
     k: int = DEFAULT_SHINGLE_K,
     vectorized: bool = True,
 ) -> DataFrame:
-    """(id, __s0..__s{n-1}): minhash signature columns via mapInPandas.
+    """(id, __s0..__s{n-1}, sh) from ONE Arrow stage (mapInArrow): the
+    minhash signature columns (null for a null text) and ``sh``, the
+    document's distinct ``stable_hash64`` shingle set as array<bigint>
+    (ascending; empty for a null text) — the exact value of the oracle's
+    ``list_distinct(list_transform(shingles, s -> hash64(s)))``, which is
+    what Jaccard verification intersects.  Both come from the same interned
+    shingles, so the set costs one more md5 per distinct shingle rather than
+    a JVM ``transform`` that md5s every shingle occurrence.
 
     ``vectorized=True`` (default) runs the flat-buffer/sliding-window/
     reduceat form with no per-document Python loop; ``False`` keeps the
     original per-doc interned-set form for differential testing
     (test_minhash_vectorized_equals_pandas)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    in_schema = df.schema
     out_schema = StructType(
-        [in_schema[id_col]]
-        + [StructField(f"__s{j}", LongType(), False) for j in range(num_hashes)]
+        [df.schema[id_col]]
+        + [StructField(f"__s{j}", LongType(), True) for j in range(num_hashes)]
+        + [StructField("sh", ArrayType(LongType(), False), False)]
     )
+    names = out_schema.fieldNames()
 
     def compute_vec(batches):
-        for pdf in batches:
-            mins = _minhash_batch_vectorized(pdf, text_col, id_col, num_hashes, k)
-            out = {id_col: pdf[id_col]}
-            for j in range(num_hashes):
-                out[f"__s{j}"] = mins[:, j]
-            yield pd.DataFrame(out)
+        for batch in batches:
+            cols = _minhash_batch_vectorized(
+                batch.to_pandas(), text_col, id_col, num_hashes, k
+            )
+            yield pa.RecordBatch.from_arrays([batch.column(0)] + cols, names=names)
 
     def compute(batches):
-        for pdf in batches:
-            texts = pdf[text_col]
-            doc_shingles = [
-                _py_shingles(t, k) if isinstance(t, str) else {""} for t in texts
-            ]
-            # intern: hash each distinct shingle of the batch once per family
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            doc_shingles = [set() if t is None else _py_shingles(t, k) for t in texts]
+            # intern: hash each distinct shingle of the batch once per row
             vocab: dict[str, int] = {}
             for sh in doc_shingles:
                 for s in sh:
                     vocab.setdefault(s, len(vocab))
             hv = _md5_family_hashes(list(vocab), num_hashes)
-            out = {id_col: pdf[id_col]}
-            mins = np.empty((len(pdf), num_hashes), dtype=np.int64)
+            mins = np.zeros((len(texts), num_hashes), dtype=np.uint64)
+            docs, hashes = [], []
             for r, sh in enumerate(doc_shingles):
+                if not sh:
+                    continue
                 ids = np.fromiter((vocab[s] for s in sh), dtype=np.intp, count=len(sh))
-                mins[r] = hv[:, ids].min(axis=1).astype(np.int64)
-            for j in range(num_hashes):
-                out[f"__s{j}"] = mins[:, j]
-            yield pd.DataFrame(out)
+                mins[r] = hv[:num_hashes, ids].min(axis=1)
+                docs.append(np.full(ids.size, r))
+                hashes.append(hv[num_hashes, ids])
+            valid = np.array([t is not None for t in texts], dtype=bool)
+            cols = _signature_arrays(mins, valid, docs, hashes)
+            yield pa.RecordBatch.from_arrays([batch.column(0)] + cols, names=names)
 
     fn = compute_vec if vectorized else compute
     # small inputs split into fewer scan partitions than cores, starving the
@@ -339,7 +370,29 @@ def minhash_signatures_df(
     from .scale import ensure_min_parallelism
 
     slim = ensure_min_parallelism(df.select(id_col, text_col))
-    return slim.mapInPandas(fn, schema=out_schema)
+    return slim.mapInArrow(fn, schema=out_schema)
+
+
+def _bands_of(sigs: DataFrame, id_col: str, num_hashes: int, band_size: int) -> DataFrame:
+    """(id, band_id, band_key) from a signature frame.  ``concat`` (not
+    ``concat_ws``) so a null signature gives a null key, as ``||`` does in
+    the oracle."""
+    n_bands = num_hashes // band_size
+    bands = []
+    for b in range(n_bands):
+        parts = []
+        for i in range(band_size):
+            if i:
+                parts.append(F.lit(","))
+            parts.append(F.col(f"__s{b * band_size + i}").cast("string"))
+        bands.append(
+            F.struct(
+                F.lit(b).alias("band_id"), F.md5(F.concat(*parts)).alias("band_key")
+            )
+        )
+    return sigs.select(id_col, F.explode(F.array(*bands)).alias("b")).select(
+        id_col, F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key")
+    )
 
 
 def minhash_bands(
@@ -353,32 +406,16 @@ def minhash_bands(
     """(id, band_id, band_key): LSH bucket assignments.  Documents sharing a
     (band_id, band_key) are near-duplicate candidates.
 
-    Signatures are computed in an Arrow-batched pandas stage with per-batch
+    Signatures are computed in an Arrow-batched Python stage with per-batch
     shingle interning (measured ~6× faster than JVM array expressions, whose
     higher-order functions run interpreted, and ~10× fewer md5 calls than
     per-row hashing since shingles repeat across documents).  Band keys and
     bucketing stay JVM-side; the only shuffle carries num_hashes bigints per
     doc.  Hash scheme (md5 of "j:<shingle>", first 15 hex digits) is
     bit-identical to the DuckDB oracle."""
-    sigs = minhash_signatures_df(df, text_col, id_col, num_hashes, k)
-    n_bands = num_hashes // band_size
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"__s{b * band_size + i}").cast("string")
-                        for i in range(band_size)
-                    ],
-                )
-            ).alias("band_key"),
-        )
-        for b in range(n_bands)
-    ]
-    return sigs.select(id_col, F.explode(F.array(*bands)).alias("b")).select(
-        id_col, F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key")
+    return _bands_of(
+        minhash_signatures_df(df, text_col, id_col, num_hashes, k),
+        id_col, num_hashes, band_size,
     )
 
 
@@ -397,6 +434,92 @@ def lsh_candidate_buckets(
 DEFAULT_MAX_BUCKET = 256
 
 
+def _signature_pass(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int = DEFAULT_SHINGLE_K,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    band_size: int = DEFAULT_BAND_SIZE,
+) -> tuple[DataFrame, DataFrame]:
+    """(bands, sh): the LSH band assignments and the (id, sh) shingle-hash
+    sets of ONE signature stage."""
+    sigs = minhash_signatures_df(df, text_col, id_col, num_hashes, k)
+    return _bands_of(sigs, id_col, num_hashes, band_size), sigs.select(id_col, "sh")
+
+
+def _bucket_candidates(
+    bands: DataFrame,
+    id_col: str,
+    max_bucket: int,
+    all_pairs: bool = True,
+    rep_pairs: bool = True,
+) -> DataFrame:
+    """Distinct (id_a < id_b) candidate pairs from ONE groupBy(band_id,
+    band_key) collecting each bucket's sorted ids: a bucket of n ≤
+    ``max_bucket`` docs (every bucket when ``max_bucket`` is 0) gives all its
+    i<j pairs (``all_pairs``), a larger one (min id, member) pairs
+    (``rep_pairs``).  Null band keys (null texts) never pair: their
+    verification is the oracle's 0/0, which no threshold passes."""
+    n = F.col("n")
+    small = n <= max_bucket if max_bucket else F.lit(True)
+    buckets = (
+        bands.filter(F.col("band_key").isNotNull())
+        .groupBy("band_id", "band_key")
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .select("ids", F.size("ids").alias("n"))
+        .filter(n > 1)
+    )
+    ids = F.col("ids")
+
+    def pair(a: Column, b: Column) -> Column:
+        return F.struct(a.alias("id_a"), b.alias("id_b"))
+
+    every = F.flatten(
+        F.transform(
+            ids, lambda a, i: F.transform(F.slice(ids, i + 2, n), lambda b: pair(a, b))
+        )
+    )
+    rep = F.transform(F.slice(ids, 2, n), lambda b: pair(F.element_at(ids, 1), b))
+    if all_pairs and rep_pairs:
+        pairs = F.when(small, every).otherwise(rep)
+    elif all_pairs:
+        buckets, pairs = buckets.filter(small), every
+    else:
+        buckets, pairs = buckets.filter(n > max_bucket), rep
+    return (
+        buckets.select(F.inline(pairs))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+
+
+def _jaccard_millis(sh_a: Column, sh_b: Column) -> Column:
+    """Exact Jaccard of two distinct shingle-hash sets in 1/1000ths, with
+    the oracle's ``floor(1000.0 * inter / union)`` arithmetic; null when
+    both sets are empty (the oracle's 0/0), so no threshold passes it."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    union = F.size(sh_a) + F.size(sh_b) - inter
+    return F.when(union > 0, F.floor(1000.0 * inter / union).cast("long"))
+
+
+def _verify(
+    cand: DataFrame, sh: DataFrame, id_col: str, threshold_millis: int
+) -> DataFrame:
+    """(id_a, id_b, jaccard_millis) of the candidate pairs at or above
+    ``threshold_millis``: one join of the pair list against ``sh`` per
+    side."""
+    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    jac = _jaccard_millis(F.col("sh_a"), F.col("sh_b"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", jac.alias("jaccard_millis"))
+        .filter(F.col("jaccard_millis") >= threshold_millis)
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -407,15 +530,17 @@ def jaccard_pairs(
     **kw,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates verified with exact shingle
-    Jaccard (integerized to 1/1000ths).  The self-join runs only inside LSH
+    Jaccard (integerized to 1/1000ths).  Pairs form only inside LSH
     buckets — never all-pairs.
 
-    Scale shape: shingles are hashed to int64 (the portable md5 scheme)
-    BEFORE the pair join, so the verify shuffle carries fixed-width bigint
-    arrays instead of raw shingle strings (~4-8x narrower); the intersection
-    is the JVM-optimized ``array_intersect`` (sets are distinct by
-    construction; an in-doc hash collision merges identically in the DuckDB
-    oracle since the hash scheme is shared).
+    Scale shape: one signature stage yields both the band keys and each
+    doc's int64 shingle-hash set ``sh`` (the portable md5 scheme), so the
+    verify shuffle carries fixed-width bigint arrays instead of raw shingle
+    strings (~4-8x narrower); the intersection is the JVM-optimized
+    ``array_intersect`` (sets are distinct by construction; an in-doc hash
+    collision merges identically in the DuckDB oracle since the hash scheme
+    is shared).  Candidates come from one bucket groupBy
+    (``_bucket_candidates``).
 
     ``max_bucket`` (OPT-IN, default 0 = uncapped) drops every candidate pair
     in any (band_id, band_key) bucket holding more than that many docs, to
@@ -423,44 +548,12 @@ def jaccard_pairs(
     templated docs, exactly the content dedup targets — routinely put
     hundreds of genuinely near-identical docs in one bucket, so a cap LOSES
     TRUE PAIRS (ADVICE r2).  When capping, run ``oversized_lsh_buckets`` with
-    the same parameters to measure what was skipped, and route those groups
-    through ``exact_dedup`` / a representative-based pass instead of pairwise
-    verification."""
-    bands = minhash_bands(df, text_col, id_col, **kw)
-    if max_bucket:
-        sizes = bands.groupBy("band_id", "band_key").agg(
-            F.count(F.lit(1)).alias("__bsz")
-        )
-        bands = bands.join(sizes, ["band_id", "band_key"]).filter(
-            F.col("__bsz") <= max_bucket
-        ).drop("__bsz")
-    docs = df.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(shingles(F.col(text_col), k), stable_hash64)
-        ).alias("sh"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    da = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    db = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = pairs.join(da, "id_a").join(db, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.floor(1000.0 * inter / union).cast("long")
-    return joined.select("id_a", "id_b", jac.alias("jaccard_millis")).filter(
-        F.col("jaccard_millis") >= threshold_millis
-    )
+    the same parameters to measure what was skipped, and recover those
+    buckets with ``jaccard_rep_pairs`` — or call ``near_dup_pairs``, which
+    is both in one pass."""
+    bands, sh = _signature_pass(df, text_col, id_col, k, **kw)
+    cand = _bucket_candidates(bands, id_col, max_bucket, rep_pairs=False)
+    return _verify(cand, sh, id_col, threshold_millis)
 
 
 def oversized_lsh_buckets(
@@ -500,36 +593,39 @@ def jaccard_rep_pairs(
     min-id REPRESENTATIVE only — O(bucket) pairs instead of O(bucket²).
     Returns (id_a=representative, id_b=member, jaccard_millis).
 
-    Complement of ``jaccard_pairs(max_bucket=...)``: run both and union —
-    small buckets get exact all-pairs, poisoned buckets get
-    representative-linked near-dup clusters (transitively: members similar
-    to the same representative are duplicates of each other for dedup
-    purposes)."""
-    bands = minhash_bands(df, text_col, id_col, **kw)
-    buckets = bands.groupBy("band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__rep")
-    ).filter(F.col("__bsz") > max_bucket)
-    pairs = (
-        bands.join(buckets, ["band_id", "band_key"])
-        .filter(F.col(id_col) != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
-        .distinct()
-    )
-    docs = df.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(shingles(F.col(text_col), k), stable_hash64)
-        ).alias("sh"),
-    )
-    da = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    db = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = pairs.join(da, "id_a").join(db, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.floor(1000.0 * inter / union).cast("long")
-    return joined.select("id_a", "id_b", jac.alias("jaccard_millis")).filter(
-        F.col("jaccard_millis") >= threshold_millis
-    )
+    Complement of ``jaccard_pairs(max_bucket=...)``; ``near_dup_pairs`` is
+    the union of the two from one signature pass — small buckets get exact
+    all-pairs, poisoned buckets get representative-linked near-dup clusters
+    (transitively: members similar to the same representative are
+    duplicates of each other for dedup purposes)."""
+    bands, sh = _signature_pass(df, text_col, id_col, k, **kw)
+    cand = _bucket_candidates(bands, id_col, max_bucket, all_pairs=False)
+    return _verify(cand, sh, id_col, threshold_millis)
+
+
+def near_dup_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold_millis: int = 500,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
+    k: int = DEFAULT_SHINGLE_K,
+    **kw,
+) -> DataFrame:
+    """``jaccard_pairs(max_bucket) ∪ jaccard_rep_pairs(max_bucket)`` as
+    (id_a, id_b, jaccard_millis) from ONE signature pass — the near-dup
+    gate's pair finder: exact all-pairs verification in buckets of at most
+    ``max_bucket`` docs, linear representative verification in larger ones.
+
+    Plan shape: one Arrow signature stage emits both the minhash columns
+    and the shingle-hash sets ``sh``; the band keys feed one
+    groupBy(band_id, band_key) that collects each bucket's sorted ids and
+    expands them to either candidate kind; one distinct; one verify join of
+    the pair list against ``sh`` per side.  At most two Python map nodes
+    (the band side and the ``sh`` side) and no JVM shingle hashing."""
+    bands, sh = _signature_pass(df, text_col, id_col, k, **kw)
+    return _verify(_bucket_candidates(bands, id_col, max_bucket), sh, id_col,
+                   threshold_millis)
 
 
 def winnow_dup_pairs(
@@ -893,7 +989,7 @@ def simhash_signatures_df(
                 vocab: dict[str, int] = {}
                 doc_tokens = []
                 for t in texts:
-                    base = ws.sub(" ", t.lower()).strip() if isinstance(t, str) else ""
+                    base = ws.sub(" ", t.lower()).strip(" ") if isinstance(t, str) else ""
                     tk = base.split(" ")
                     doc_tokens.append(
                         np.fromiter(
@@ -997,12 +1093,12 @@ def incremental_dedup(
     # while verifying with k); a materialized existing_bands /
     # existing_shingles index must have been built with the same
     # k/num_hashes/band_size as this call's kw.
-    nb = minhash_bands(new_df, text_col, id_col, k=k, **kw)
-    eb = (
-        existing_bands
-        if existing_bands is not None
-        else minhash_bands(existing_df, text_col, id_col, k=k, **kw)
-    )
+    nb, sh_new = _signature_pass(new_df, text_col, id_col, k, **kw)
+    eb, sh_old = existing_bands, existing_shingles
+    if eb is None or sh_old is None:
+        bands_c, sh_c = _signature_pass(existing_df, text_col, id_col, k, **kw)
+        eb = bands_c if eb is None else eb
+        sh_old = sh_c if sh_old is None else sh_old
     if max_bucket:
         sizes = eb.groupBy("band_id", "band_key").agg(
             F.count(F.lit(1)).alias("__bsz")
@@ -1010,14 +1106,6 @@ def incremental_dedup(
         eb = eb.join(sizes, ["band_id", "band_key"]).filter(
             F.col("__bsz") <= max_bucket
         ).drop("__bsz")
-
-    def _sh(df):
-        return df.select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(shingles(F.col(text_col), k), stable_hash64)
-            ).alias("sh"),
-        )
 
     cand = (
         nb.alias("n")
@@ -1032,22 +1120,14 @@ def incremental_dedup(
         )
         .distinct()
     )
-    sh_new = _sh(new_df).select(
-        F.col(id_col).alias("id_new"), F.col("sh").alias("sh_n")
+    joined = cand.join(
+        sh_new.select(F.col(id_col).alias("id_new"), F.col("sh").alias("sh_n")),
+        "id_new",
+    ).join(
+        sh_old.select(F.col(id_col).alias("id_old"), F.col("sh").alias("sh_o")),
+        "id_old",
     )
-    sh_old = (
-        existing_shingles.select(
-            F.col(id_col).alias("id_old"), F.col("sh").alias("sh_o")
-        )
-        if existing_shingles is not None
-        else _sh(existing_df).select(
-            F.col(id_col).alias("id_old"), F.col("sh").alias("sh_o")
-        )
-    )
-    joined = cand.join(sh_new, "id_new").join(sh_old, "id_old")
-    inter = F.size(F.array_intersect("sh_n", "sh_o"))
-    union = F.size("sh_n") + F.size("sh_o") - inter
-    jac = F.floor(1000.0 * inter / union).cast("long")
+    jac = _jaccard_millis(F.col("sh_n"), F.col("sh_o"))
     drops = (
         joined.filter(jac >= threshold_millis)
         .select(F.col("id_new").alias("__drop"))

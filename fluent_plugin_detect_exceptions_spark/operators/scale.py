@@ -23,7 +23,16 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the session's default
     parallelism when its current plan yields fewer partitions; identity
     otherwise.  Call on a SLIM projection (the exchange moves every column
-    of ``df``)."""
+    of ``df``).
+
+    Contract: ``df`` is a scan input — a file or table scan under narrow
+    operators only (projections, filters).  The probe is
+    ``df.rdd.getNumPartitions()``, which plans ``df`` on the driver: for a
+    scan that is cheap and gives the split count.  Above an exchange,
+    adaptive execution runs the shuffle stages just to build that RDD
+    (extra jobs before the real one), and the count it returns is the
+    post-shuffle partition count, not the input's width — so do not call
+    it there."""
     if df.isStreaming:
         # a streaming plan has no static partition count (df.rdd is
         # illegal); micro-batch parallelism is the source's business

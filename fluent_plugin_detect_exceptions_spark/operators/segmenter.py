@@ -725,7 +725,11 @@ def segment(
 
     ``emit_text=False`` (fused modes only) omits the combined-text column
     from the partials — counts-only consumers then never pay the Arrow
-    transfer or the per-segment concat for text nobody reads (r6)."""
+    transfer or the per-segment concat for text nobody reads (r6); the
+    per-row path (``fuse_coalesce=False``) always carries the text, so it
+    rejects the flag rather than ignore it."""
+    if not emit_text and not cfg.fuse_coalesce:
+        raise ValueError("segment(emit_text=False) requires cfg.fuse_coalesce=True")
     rules = rules or compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
     if cfg.multiline_flush_interval is not None and cfg.ts_col not in df.columns:

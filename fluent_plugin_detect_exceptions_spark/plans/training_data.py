@@ -18,7 +18,14 @@ err.
 Scale shape: every gate reduces to a narrow id set (bigint), applied with
 left-semi joins; quality/repetition/sampling are filters computed from the
 text scan itself.  Raw text shuffles only inside the pair-finding pieces,
-which are all LSH/fp-bucketed (never all-pairs)."""
+which are all LSH/fp-bucketed (never all-pairs).
+
+The near-dup gate is one signature pass (``near_dup_pairs``): a single
+Arrow stage emits each document's minhash signature and its shingle-hash
+set; the band keys go through one bucket groupBy that yields both the
+capped all-pairs and the oversized-bucket representative candidates; one
+distinct; one verify join against the shingle-hash sets; then connected
+components over the verified pairs."""
 
 from __future__ import annotations
 
@@ -28,9 +35,8 @@ from ..functions.text import quality_stats, repetition_stats_df
 from ..operators.dedup import (
     decontaminate,
     exact_dedup_groups,
-    jaccard_pairs,
-    jaccard_rep_pairs,
     near_dedup_cc,
+    near_dup_pairs,
 )
 from ..operators.sample import stratified_sample
 
@@ -54,7 +60,8 @@ def prepare_training_data(
 
     * exact: the min-id representative per distinct text;
     * near-dup: one keep per connected component of the capped in-bucket
-      Jaccard pairs UNION the rep-pairs recovery of oversized buckets;
+      Jaccard pairs UNION the rep-pairs recovery of oversized buckets, both
+      from the one signature pass of ``near_dup_pairs``;
     * decontamination (when ``eval_df`` given): < ``decont_min_shared``
       winnowing fingerprints shared with the eval corpus;
     * quality: ≥ min_chars chars, ≥ min_tokens tokens, punct count ×
@@ -70,15 +77,10 @@ def prepare_training_data(
     )
     out = out.join(exact_keep, id_col, "left_semi")
 
-    p1 = jaccard_pairs(
+    pairs = near_dup_pairs(
         docs, text_col, id_col, threshold_millis, max_bucket=max_bucket
     ).select("id_a", "id_b")
-    p2 = jaccard_rep_pairs(
-        docs, text_col, id_col, threshold_millis, max_bucket=max_bucket
-    ).select("id_a", "id_b")
-    cc_keep = near_dedup_cc(
-        docs.select(id_col), p1.unionByName(p2).distinct(), id_col
-    )
+    cc_keep = near_dedup_cc(docs.select(id_col), pairs, id_col)
     out = out.join(cc_keep, id_col, "left_semi")
 
     if eval_df is not None:

@@ -650,3 +650,15 @@ def test_counts_fast_path_emits_no_text(spark):
     # and the default keeps it
     full = segment(df.select(*cfg.scan_columns(df.columns)), cfg)
     assert "text_part" in full.columns
+
+
+def test_emit_text_false_rejected_on_per_row_path(spark):
+    """The per-row path (fuse_coalesce=False) always carries the segment
+    text, so segment(emit_text=False) raises there instead of silently
+    returning text."""
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
+
+    df = synth_transcripts(spark, 2, 1)
+    cfg = PipelineConfig(fuse_coalesce=False)
+    with pytest.raises(ValueError, match="fuse_coalesce"):
+        segment(df.select(*cfg.scan_columns(df.columns)), cfg, emit_text=False)
