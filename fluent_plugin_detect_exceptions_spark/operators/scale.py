@@ -27,8 +27,8 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
 
     Contract: ``df`` is a scan input — a file or table scan under narrow
     operators only (projections, filters).  The probe is
-    ``df.rdd.getNumPartitions()``, which plans ``df`` on the driver: for a
-    scan that is cheap and gives the split count.  Above an exchange,
+    ``df.rdd.getNumPartitions()``, which plans ``df`` eagerly: for a scan
+    that is cheap and gives the split count.  Above an exchange,
     adaptive execution runs the shuffle stages just to build that RDD
     (extra jobs before the real one), and the count it returns is the
     post-shuffle partition count, not the input's width — so do not call
